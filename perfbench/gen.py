@@ -162,14 +162,35 @@ def _source(dialect, a, b, salt):
 MV_SQL = "SELECT o_orderstatus, count(*) AS n, sum(o_totalprice) AS total"
 
 
+def _maintenance(table):
+    """The refresh of a table's aggregate MV, then its maintenance cycle.
+    The MV is refreshed before its source's snapshots are expired: a
+    refresh whose changelog checkpoint snapshot was expired fails with
+    SnapshotNotFound (a known defect, see README.md)."""
+    mv = "mv_" + table.split("_")[1]
+    whole = "SELECT o_orderstatus, count(*) AS n, sum(o_totalprice) AS p FROM "
+    return [
+        {"kind": "mv_refresh", "table": mv, "spark": [
+            f"CALL {{cat}}.system.refresh_materialized_view(table => 'db.{mv}')"],
+         "duck": [], "reads": [{
+             "spark": f"SELECT o_orderstatus, n, total FROM {{cat}}.db.{mv}",
+             "duck": f"{MV_SQL} FROM {table} GROUP BY o_orderstatus"}]},
+        {"kind": "maintenance", "table": table, "spark": [
+            f"CALL {{cat}}.system.rewrite_data_files(table => 'db.{table}')",
+            f"CALL {{cat}}.system.expire_snapshots(table => 'db.{table}', "
+            "older_than_ms => 9999999999999, retain_last => 3)"], "duck": [],
+         "reads": [{"spark": f"{whole}{{cat}}.db.{table} GROUP BY o_orderstatus",
+                    "duck": f"{whole}{table} GROUP BY o_orderstatus"}]}]
+
+
 def dml_script(seed, sf, writes):
     """The seeded write sequence: small-batch INSERT / MERGE / UPDATE /
     DELETE (0.2-0.8% of the table), each followed by a read-your-write
     query, and in every five slots an MV refresh plus a maintenance cycle
-    (third slot, so a short run has one). The statement mix and the tables
-    it alternates between are
-    fixed; the seed draws key ranges, batch sizes and values, so runs on
-    different seeds do the same kinds of work."""
+    on each of the two tables (third slot, so a short run has one). The
+    statement mix and the tables it alternates between are fixed; the seed
+    draws key ranges, batch sizes and values, so runs on different seeds do
+    the same kinds of work."""
     rng = np.random.default_rng(seed * 7 + 3)
     n0 = max(1000, int(1_500_000 * sf))
     next_key = {"orders_cow": n0, "orders_mor": n0}
@@ -177,26 +198,12 @@ def dml_script(seed, sf, writes):
     kinds = ["insert", "merge", "update", "delete"]
     tables = ["orders_cow", "orders_mor"]
     for i in range(writes):
-        # slot -> table in even cycles; odd cycles swap the two tables
-        table = tables[[0, 1, 0, 0, 1][i % 5] ^ (i // 5 % 2)]
         if i % 5 == 2:
-            # The MV is refreshed before its source's snapshots are expired:
-            # a refresh whose changelog checkpoint snapshot was expired fails
-            # with SnapshotNotFound (a known defect, see README.md).
-            mv = "mv_" + table.split("_")[1]
-            stmts.append({"kind": "mv_refresh", "table": mv, "spark": [
-                f"CALL {{cat}}.system.refresh_materialized_view(table => 'db.{mv}')"],
-                "duck": [], "reads": [{
-                    "spark": f"SELECT o_orderstatus, n, total FROM {{cat}}.db.{mv}",
-                    "duck": f"{MV_SQL} FROM {table} GROUP BY o_orderstatus"}]})
-            whole = "SELECT o_orderstatus, count(*) AS n, sum(o_totalprice) AS p FROM "
-            stmts.append({"kind": "maintenance", "table": table, "spark": [
-                f"CALL {{cat}}.system.rewrite_data_files(table => 'db.{table}')",
-                f"CALL {{cat}}.system.expire_snapshots(table => 'db.{table}', "
-                "older_than_ms => 9999999999999, retain_last => 3)"], "duck": [],
-                "reads": [{"spark": f"{whole}{{cat}}.db.{table} GROUP BY o_orderstatus",
-                           "duck": f"{whole}{table} GROUP BY o_orderstatus"}]})
+            for table in tables:
+                stmts += _maintenance(table)
             continue
+        # slot -> table in even cycles; odd cycles swap the two tables
+        table = tables[[0, 1, None, 0, 1][i % 5] ^ (i // 5 % 2)]
         kind = kinds[[0, 1, None, 2, 3][i % 5]]
         n = int(n0 * rng.uniform(0.002, 0.008))
         salt = int(rng.integers(1, 1_000_000))

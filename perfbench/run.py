@@ -152,8 +152,6 @@ def main():
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--sf", type=float, default=None, help="override the input scale")
-    ap.add_argument("--reps", type=int, default=None,
-                    help="set-ups per run (setup_s is their median)")
     ap.add_argument("--corrupt", type=int, choices=(0, 1), default=0,
                     help="self-test: perturb every expected result; the check must fail")
     a = ap.parse_args()
@@ -189,7 +187,7 @@ def main():
     java += ["-cp", classpath, "perfbench.Main", "--workload", a.workload,
              "--seed", str(a.seed), "--work", str(work), "--trace", str(a.trace),
              "--run-dir", str(run_dir), "--data-dir", str(data_dir), "--sf", str(sf),
-             "--reps", str(a.reps or REPS), "--corrupt", str(a.corrupt)]
+             "--reps", str(REPS), "--corrupt", str(a.corrupt)]
     os.environ["SPARK_LOCAL_DIRS"] = str(run_dir / "spark-local")
     log("starting the driver JVM")
     rc = run_bounded(java, ROOT, deadline - time.time(), sys.stderr)

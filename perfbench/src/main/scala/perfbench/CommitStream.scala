@@ -8,8 +8,10 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Path}
 import java.util.UUID
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** `commit_stream`: the catalog alone, no Spark. `nproc` REST clients each
   * loop over "3 x loadTable, then one append commit" (AddSnapshot +
@@ -174,7 +176,7 @@ object CommitStream {
       Layers.selfTimes(report, trace, w, ops)
       Layers.jvmAndOverhead(report, trace, gc, Clock.ms(w0, w1))
     }
-    check(env, out, report, args.corrupt)
+    check(env, out, args.work.toLong * clients, report, args.corrupt)
     close(env)
   }
 
@@ -185,6 +187,8 @@ object CommitStream {
     val restMs = new Samples
     val conflicts = new AtomicLong
     val failed = new AtomicLong
+    /** Errors other than a 409, one per cycle they ended. */
+    val errors = new ConcurrentLinkedQueue[String]
     val acked: mutable.Map[String, mutable.ArrayBuffer[Long]] = mutable.Map.empty
     var wallMs = 0.0
   }
@@ -195,7 +199,10 @@ object CommitStream {
     env.names.foreach(n => out.acked(n) = mutable.ArrayBuffer.empty)
     val t0 = System.nanoTime()
     val threads = (0 until clients).map { c =>
-      val th = new Thread(() => client(env, args, trace, c, out), s"commit-client-$c")
+      val th = new Thread(() =>
+        try client(env, args, trace, c, out)
+        catch { case e: Throwable => out.errors.add(s"client $c: $e") },
+        s"commit-client-$c")
       th.start(); th
     }
     threads.foreach(_.join())
@@ -227,33 +234,41 @@ object CommitStream {
       val ident = TableIdent(Ns, name)
       val opId = if (args.trace) trace.nextId() else 0L
       val opStart = System.nanoTime()
-      var base: TableMetadata = null
-      (1 to 3).foreach { _ =>
-        val s = System.nanoTime()
-        base = rest("loadTable", name, opId)(client.loadTable(env.prefix, ident)).metadata
-        out.loads.add(Clock.ms(s, System.nanoTime()))
-      }
-      var id = rnd.nextLong() & Long.MaxValue
-      while (used.contains(id)) id = rnd.nextLong() & Long.MaxValue
-      used += id
-      val cs = System.nanoTime()
-      var attempt = 0
-      var done = false
-      while (!done && attempt < MaxAttempts) {
-        attempt += 1
-        val (req, upd) = appendUpdates(base, id)
-        try {
-          rest("commitTable", name, opId)(client.commitTable(env.prefix, ident, req, upd))
-          done = true
-        } catch {
-          case e: CatalogError if e.code == 409 =>
-            out.conflicts.incrementAndGet()
-            base = rest("loadTable", name, opId)(client.loadTable(env.prefix, ident)).metadata
+      // Any error but a 409 fails the cycle; the run's completeness check
+      // then fails too, so a partial run is never reported as correct.
+      try {
+        var base: TableMetadata = null
+        (1 to 3).foreach { _ =>
+          val s = System.nanoTime()
+          base = rest("loadTable", name, opId)(client.loadTable(env.prefix, ident)).metadata
+          out.loads.add(Clock.ms(s, System.nanoTime()))
         }
+        var id = rnd.nextLong() & Long.MaxValue
+        while (used.contains(id)) id = rnd.nextLong() & Long.MaxValue
+        used += id
+        val cs = System.nanoTime()
+        var attempt = 0
+        var done = false
+        while (!done && attempt < MaxAttempts) {
+          attempt += 1
+          val (req, upd) = appendUpdates(base, id)
+          try {
+            rest("commitTable", name, opId)(client.commitTable(env.prefix, ident, req, upd))
+            done = true
+          } catch {
+            case e: CatalogError if e.code == 409 =>
+              out.conflicts.incrementAndGet()
+              base = rest("loadTable", name, opId)(client.loadTable(env.prefix, ident)).metadata
+          }
+        }
+        out.commits.add(Clock.ms(cs, System.nanoTime()))
+        if (done) out.acked.synchronized { out.acked(name) += id }
+        else out.failed.incrementAndGet()
+      } catch {
+        case e: Throwable =>
+          out.failed.incrementAndGet()
+          out.errors.add(s"client $c cycle $k on $name: $e")
       }
-      out.commits.add(Clock.ms(cs, System.nanoTime()))
-      if (done) out.acked.synchronized { out.acked(name) += id }
-      else out.failed.incrementAndGet()
       if (args.trace) {
         val e = System.nanoTime()
         trace.spans.add(Span(opId, "cycle", "op", opStart, e, 0, opId, name))
@@ -263,7 +278,7 @@ object CommitStream {
 
   /** Every table's main chain is linear and holds every seeded and every
     * acknowledged snapshot exactly once, and nothing else. */
-  def check(env: Env, out: Outcome, report: Report, corrupt: Boolean): Unit = {
+  def check(env: Env, out: Outcome, cycles: Long, report: Report, corrupt: Boolean): Unit = {
     var bad = List.empty[String]
     val expectedAcks = out.acked.map { case (k, v) => k -> v.toSeq }.toMap
     val expected = if (!corrupt) expectedAcks else {
@@ -290,5 +305,11 @@ object CommitStream {
         bad ::= s"$name: seeded prefix of the chain changed"
     }
     report.check("commit_stream.linear_history", bad.isEmpty, bad.take(5).mkString("; "))
+    // fixed work: every client made all its cycles (3 loads and one commit each)
+    val errors = out.errors.asScala.toSeq
+    report.check("commit_stream.all_cycles_completed",
+      errors.isEmpty && out.commits.size == cycles && out.loads.size == 3 * cycles,
+      s"${out.commits.size}/$cycles commits, ${out.loads.size}/${3 * cycles} loads" +
+        errors.take(3).map("; " + _).mkString)
   }
 }

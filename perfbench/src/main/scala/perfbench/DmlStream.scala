@@ -4,6 +4,8 @@ import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.SparkSession
 
 import java.nio.file.Files
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 /** `dml_stream`: one Spark session through `GraftSparkCatalog` runs the
@@ -34,14 +36,18 @@ object DmlStream {
       SparkRig.attachCatalog(spark, env.name, env.cat)
       val c = env.name
       spark.sql(s"CREATE NAMESPACE $c.db")
+      // the two tables share nothing, so they load concurrently
+      implicit val ec: ExecutionContext = ExecutionContext.global
       Seq("orders_cow" -> "", "orders_mor" ->
-        " TBLPROPERTIES ('write.delete.mode' = 'merge-on-read')").foreach { case (t, props) =>
-        spark.sql(s"CREATE TABLE $c.db.$t ($Columns)$props")
-        spark.sql(s"INSERT INTO $c.db.$t SELECT o_orderkey, o_custkey, o_orderstatus, " +
-          "o_totalprice, CAST(o_orderdate AS DATE), o_orderpriority FROM src_orders")
-        spark.sql(s"CREATE MATERIALIZED VIEW $c.db.mv_${t.stripPrefix("orders_")} AS " +
-          s"${script.get("mv_select").asText()} FROM $c.db.$t GROUP BY o_orderstatus")
-      }
+        " TBLPROPERTIES ('write.delete.mode' = 'merge-on-read')").map { case (t, props) =>
+        Future {
+          spark.sql(s"CREATE TABLE $c.db.$t ($Columns)$props")
+          spark.sql(s"INSERT INTO $c.db.$t SELECT o_orderkey, o_custkey, o_orderstatus, " +
+            "o_totalprice, CAST(o_orderdate AS DATE), o_orderpriority FROM src_orders")
+          spark.sql(s"CREATE MATERIALIZED VIEW $c.db.mv_${t.stripPrefix("orders_")} AS " +
+            s"${script.get("mv_select").asText()} FROM $c.db.$t GROUP BY o_orderstatus")
+        }
+      }.foreach(Await.result(_, Duration.Inf))
       env
     }
     def exec(sqls: JsonNode, c: String): Unit =
@@ -52,8 +58,8 @@ object DmlStream {
       }
     def close(env: Env): Unit = { env.cat.close(); env.cat.shutdownDb() }
 
-    // warm-up: the script's reads, on the first set-up's tables (the
-    // measured set-up follows a full one, which warms the write path)
+    // warm-up: the script's reads, on the measured set-up's tables (that
+    // set-up follows a full one, which warms the write path)
     def readsOf(st: JsonNode): Seq[JsonNode] = Option(st.get("reads")).toSeq.flatMap(_.asScala)
     // the first writes' reads touch both tables
     def warm(env: Env): Unit = stmts.flatMap(readsOf).take(WarmReads)

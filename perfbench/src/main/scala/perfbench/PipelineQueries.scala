@@ -2,6 +2,9 @@ package perfbench
 
 import graft.{SparkEntry, Tables}
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 /** `pipeline_queries`: a fixed subset of `SparkEntry.queries`, one query
   * per family, over the generated parquet tables (no catalog). Each
   * execution constructs the query, plans it and runs it to the `noop`
@@ -24,9 +27,14 @@ object PipelineQueries {
     // a set-up resolves the input tables (schemas, file listings)
     def setupOne(rep: Int, traced: Boolean): Unit =
       Inputs.foreach(t => Tables.load(spark, dir, t).schema)
-    // the warm-up execution writes each result for the oracle check
-    def warm(u: Unit): Unit = queries.foreach { case (name, f) =>
-      f(spark, dir).write.mode("overwrite").parquet(args.runDir.resolve(s"out/$name").toString)
+    // The warm-up execution writes each result for the oracle check. The
+    // queries warm up concurrently: a first execution is mostly
+    // single-threaded JIT and planning work, so this shortens set-up.
+    def warm(u: Unit): Unit = {
+      implicit val ec: ExecutionContext = ExecutionContext.global
+      queries.map { case (name, f) =>
+        Future(f(spark, dir).write.mode("overwrite").parquet(args.runDir.resolve(s"out/$name").toString))
+      }.foreach(Await.result(_, Duration.Inf))
     }
     val reps = Reps.run[Unit](args, setupOne, warm, _ => ())
 
