@@ -44,7 +44,7 @@ FIRST_RUN_DEADLINE_S = 880.0
 WORK_PER_SECOND = {
     "commit_stream": 5.0,     # commit cycles per client
     "dml_stream": 0.84,       # slots of the write sequence (5 make one cycle)
-    "scan_queries": 0.5,      # rounds of the query set
+    "scan_queries": 1.0,      # rounds of the query set
     "pipeline_queries": 0.1,  # rounds of the query set
 }
 # Input scale factor (TPC-H-like tables generated from the seed).

@@ -18,9 +18,11 @@ import scala.jdk.CollectionConverters._
   * metadata table) and commits nothing. */
 object ScanQueries {
   val Classes = Seq("selective", "full", "metadata", "time_travel")
-  /** Query rounds before the measured phase: after one, the first measured
-    * round still ran 10-25% slower than the later ones (JIT warm-up). */
-  val WarmRounds = 2
+  /** Query rounds before the measured phase. The first measured round still
+    * runs 10-25% slower than the later ones (JIT warm-up); the measured phase
+    * has enough rounds that one slow round's slowest queries lie above the
+    * 95th percentile. */
+  val WarmRounds = 1
   val LineitemCols = "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
     "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, " +
     "l_tax DOUBLE, l_returnflag STRING, l_linestatus STRING, l_shipdate DATE"
