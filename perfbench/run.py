@@ -45,7 +45,7 @@ WORK_PER_SECOND = {
     "commit_stream": 5.0,     # commit cycles per client
     "dml_stream": 0.84,       # slots of the write sequence (5 make one cycle)
     "scan_queries": 1.0,      # rounds of the query set
-    "pipeline_queries": 0.1,  # rounds of the query set
+    "pipeline_queries": 0.34, # rounds of the query set (2 at --seconds 6)
 }
 # Input scale factor (TPC-H-like tables generated from the seed).
 SCALE = {"commit_stream": 0.0, "dml_stream": 0.02, "scan_queries": 0.02,
