@@ -59,6 +59,10 @@ object Bench {
   private val CalibMtRef: Double =
     sys.env.get("SPARK_GRAFT_BENCH_CALIB_MT_REF").map(_.toDouble).getOrElse(0.64)
 
+  /** An integer env setting; unset or non-numeric falls back to `default`. */
+  private def envInt(name: String, default: Int): Int =
+    sys.env.get(name).flatMap(_.trim.toIntOption).getOrElse(default)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -116,7 +120,7 @@ object Bench {
     // SPARK_GRAFT_BENCH_MAX_LOAD makes a still-loaded box a REFUSAL
     // (exit 2) instead of a flagged artifact.
     val loadWarn = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_WARN", "1.5").toDouble
-    val settleSecs = sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE_SECS", "90").toInt
+    val settleSecs = envInt("SPARK_GRAFT_BENCH_SETTLE_SECS", 90)
     val loadAvgInitial = sysLoadAvg
     var loadAvgPre = loadAvgInitial
     if (loadAvgPre > loadWarn && settleSecs > 0) {
@@ -276,7 +280,7 @@ object Bench {
     // query; a 5-rep median tolerates two without moving, so the
     // headline tracks the plan instead of the neighbors (r11's 3×
     // median/min spreads on untouched queries)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt.max(1)
+    val reps = envInt("SPARK_GRAFT_BENCH_REPS", 5).max(1)
     val rounds = Seq.fill(reps) {
       // between full rounds (charged to no query): trigger the
       // ContextCleaner so shuffle files / broadcast blocks of the
@@ -307,7 +311,7 @@ object Bench {
     // combined median (blips are diluted, never erased), and the
     // verdict remains the freshest set's — same adjudication rule as
     // r19, just applied to the final attempt instead of the only one.
-    val rerunMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_RERUN_MAX", "3").toInt.max(1)
+    val rerunMax = envInt("SPARK_GRAFT_BENCH_RERUN_MAX", 3).max(1)
     val rerunTimes: Map[String, (Seq[Double], Seq[Double])] =
       if (!rerunUnstable) Map.empty
       else measured.filter { case (_, ts) => isUnstable(ts) }.map { case (name, _) =>

@@ -25,12 +25,38 @@ import scala.jdk.CollectionConverters._
   * (409 → client retry), the same linearization the reference gets from
   * Postgres row locks.
   *
+  * Parsed-metadata cache: a `metadata_location` names one immutable
+  * document. Creates and commits write a fresh UUID-named location every
+  * time and never rewrite an old one; register adopts the document read
+  * from the file it names. So each store keeps a bounded map from
+  * location to parsed [[TableMetadata]] ([[JdbcCatalogStore.MetadataCacheEntries]]
+  * entries, least recently used evicted), and a row read parses its
+  * metadata CLOB only when the row's location is not in the map. The
+  * location itself is always read from the row, under the same isolation
+  * as before, so a cached entry can never stand in for a newer row, even
+  * with several servers on one database. Staged rows (no location) are
+  * never cached; a commit records the version it wrote after its DB
+  * COMMIT and drops the one it replaced.
+  *
   * Derby stands in for Postgres because it ships with Spark; the SQL is
   * vanilla enough that a postgres:// URL needs only the DDL tweaked.
   */
 final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
   import CatalogError._
   import JdbcCatalogStore._
+
+  /** Parsed metadata by `metadata_location`; see the class header. */
+  private val parsedMetadata: java.util.Map[String, TableMetadata] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[String, TableMetadata](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[String, TableMetadata]): Boolean =
+          size() > MetadataCacheEntries
+      })
+
+  /** The locations whose parsed metadata this store holds. */
+  private[catalog] def cachedMetadataLocations: Set[String] =
+    parsedMetadata.synchronized(parsedMetadata.keySet.asScala.toSet)
 
   bootstrap()
 
@@ -351,11 +377,12 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
       ).left.map(fromCommit)
       metadata <- builder.build().left.map(fromCommit)
     } yield {
+      val json = JsonCodecs.metadataToJson(metadata)
       val metadataLocation =
         if (stageCreate) None
         else {
           val loc = newMetadataLocation(location)
-          MetadataIO.write(loc, metadata)
+          MetadataIO.writeJson(loc, json)
           Some(loc)
         }
       val rec = TableRecord(tableId, ns, name, metadata, metadataLocation, location)
@@ -368,7 +395,7 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
         if (existing.isDefined)
           update(c, "DELETE FROM tbls WHERE wh = ? AND ns = ? AND name = ?",
             Seq(wh.toString, encodeNs(ns), name))
-        insertTable(c, wh, rec)
+        insertTable(c, wh, rec, json)
         c.commit()
       } catch {
         case e: java.sql.SQLException if e.getSQLState == "23505" =>
@@ -381,11 +408,11 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
     }
   }
 
-  private def insertTable(c: Connection, wh: UUID, rec: TableRecord): Unit =
+  /** `json` is `metadataToJson(rec.metadata)`, encoded once by the caller. */
+  private def insertTable(c: Connection, wh: UUID, rec: TableRecord, json: String): Unit =
     update(c, "INSERT INTO tbls VALUES (?,?,?,?,?,?,?)", Seq(
       wh.toString, encodeNs(rec.namespace), rec.name, rec.tableId.toString,
-      JsonCodecs.metadataToJson(rec.metadata), rec.metadataLocation.orNull,
-      rec.tableLocation))
+      json, rec.metadataLocation.orNull, rec.tableLocation))
 
   private def newMetadataLocation(tableLocation: String): String =
     s"$tableLocation/metadata/${UUID.randomUUID()}.gz.metadata.json"
@@ -420,7 +447,7 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
         if (existing.isDefined)
           update(c, "DELETE FROM tbls WHERE wh = ? AND ns = ? AND name = ?",
             Seq(wh.toString, encodeNs(ns), name))
-        insertTable(c, wh, rec)
+        insertTable(c, wh, rec, JsonCodecs.metadataToJson(metadata))
         c.commit()
       } catch {
         // name PK or the (wh, table_id) unique index — the latter is
@@ -432,6 +459,9 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
             s"table $name (or its metadata tree's uuid) is already registered")
         case e: Throwable => c.rollback(); throw e
       } finally c.setAutoCommit(true)
+      // a location may be registered again after a drop: replace any
+      // entry an earlier registration of it left
+      parsedMetadata.put(metadataLocation, metadata)
       rec
     }
   }
@@ -512,7 +542,8 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
         // (deadlock-free), assert requirements against the row as
         // locked, fold updates. This is the reference's Postgres
         // transaction (postgres/table.rs:639-852).
-        val applied = Vector.newBuilder[(TableIdent, TableRecord)]
+        // (ident, location the commit replaces, next record)
+        val applied = Vector.newBuilder[(TableIdent, Option[String], TableRecord)]
         for (change <- changes.sortBy(ch =>
           (ch.ident.namespace.mkString("\u0000"), ch.ident.name))) {
           val existing = lockTableRow(c, wh, change.ident)
@@ -545,25 +576,28 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
               val withLog = stamped.copy(metadataLog = rec.metadataLocation.fold(
                 stamped.metadataLog)(prev =>
                 stamped.metadataLog :+ MetadataLogEntry(prev, rec.metadata.lastUpdatedMs)))
-              applied += change.ident -> rec.copy(
-                metadata = withLog, metadataLocation = Some(newLoc))
+              applied += ((change.ident, rec.metadataLocation,
+                rec.copy(metadata = withLog, metadataLocation = Some(newLoc))))
           }
         }
 
-        // Phase 2 — write metadata files, then swap all rows; the DB
-        // COMMIT is the atomic visibility point.
+        // Phase 2 — encode each version once, write its metadata file
+        // and swap its row; the DB COMMIT is the atomic visibility point.
         val results = applied.result()
-        results.foreach { case (_, rec) =>
-          MetadataIO.write(rec.metadataLocation.get, rec.metadata)
-        }
-        results.foreach { case (id, rec) =>
+        results.foreach { case (id, _, rec) =>
+          val json = JsonCodecs.metadataToJson(rec.metadata)
+          MetadataIO.writeJson(rec.metadataLocation.get, json)
           update(c,
             "UPDATE tbls SET metadata = ?, metadata_location = ? WHERE wh = ? AND ns = ? AND name = ?",
-            Seq(JsonCodecs.metadataToJson(rec.metadata), rec.metadataLocation.get,
+            Seq(json, rec.metadataLocation.get,
               wh.toString, encodeNs(id.namespace), id.name))
         }
         c.commit()
-        Right(results.map(_._2))
+        results.foreach { case (_, replaced, rec) =>
+          replaced.foreach(l => parsedMetadata.remove(l))
+          parsedMetadata.put(rec.metadataLocation.get, rec.metadata)
+        }
+        Right(results.map(_._3))
       } catch {
         case e: Throwable => c.rollback(); throw e
       } finally c.setAutoCommit(true)
@@ -771,15 +805,22 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
     } finally ps.close()
   }
 
+  /** Reads the metadata CLOB only when the row's location misses the
+    * parsed-metadata cache. */
   private def readTable(rs: ResultSet): TableRecord = {
-    val metadata = JsonCodecs.metadataFromJson(rs.getString("metadata"))
-      .fold(e => sys.error(s"corrupt metadata row: $e"), identity)
+    val location = Option(rs.getString("metadata_location"))
+    val metadata = location.flatMap(l => Option(parsedMetadata.get(l))).getOrElse {
+      val m = JsonCodecs.metadataFromJson(rs.getString("metadata"))
+        .fold(e => sys.error(s"corrupt metadata row: $e"), identity)
+      location.foreach(parsedMetadata.put(_, m))
+      m
+    }
     TableRecord(
       UUID.fromString(rs.getString("table_id")),
       decodeNs(rs.getString("ns")),
       rs.getString("name"),
       metadata,
-      Option(rs.getString("metadata_location")),
+      location,
       rs.getString("table_location"))
   }
 
@@ -821,6 +862,10 @@ object JdbcCatalogStore {
   private val ReservedNamespaces = Set("system", "examples")
   /** Namespaces are single-level (reference MAX_NAMESPACE_DEPTH=1). */
   private val MaxNamespaceDepth = 1
+
+  /** Bound of each store's parsed-metadata cache. An entry is one table
+    * version; at 2000 snapshots its JSON is about 1 MB. */
+  private[catalog] val MetadataCacheEntries = 64
 
   /** Namespace path ↔ one column (unit-separator join — never appears
     * in valid namespace parts). */

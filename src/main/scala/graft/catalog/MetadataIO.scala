@@ -24,11 +24,16 @@ object MetadataIO {
     * a storage profile is configured). */
   def isWritable(location: String): Boolean = FileIO.canHandle(location)
 
-  def write(location: String, metadata: TableMetadata): Unit = {
+  def write(location: String, metadata: TableMetadata): Unit =
+    writeJson(location, JsonCodecs.metadataToJson(metadata))
+
+  /** Writes an already-encoded `metadataToJson` document, for callers
+    * that also store the same string in the catalog row. */
+  def writeJson(location: String, json: String): Unit = {
     if (!isWritable(location)) return
     val buf = new ByteArrayOutputStream()
     val out = new GZIPOutputStream(buf)
-    try out.write(JsonCodecs.metadataToJson(metadata).getBytes(StandardCharsets.UTF_8))
+    try out.write(json.getBytes(StandardCharsets.UTF_8))
     finally out.close()
     FileIO.forLocation(location).write(location, buf.toByteArray)
   }

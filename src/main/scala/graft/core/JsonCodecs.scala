@@ -256,7 +256,9 @@ object JsonCodecs {
       Option(node.get("max-ref-age-ms")).filter(!_.isNull).map(_.asLong()))
 
   // ---------------------------------------------------- table metadata
-  def metadataToJson(m: TableMetadata): String = {
+  /** The metadata document as a tree, for callers that embed it in a
+    * larger document (the REST responses) without a string round trip. */
+  def metadataToNode(m: TableMetadata): ObjectNode = {
     val o = mapper.createObjectNode()
     o.put("format-version", m.formatVersion)
     o.put("table-uuid", m.tableUuid.toString)
@@ -328,12 +330,19 @@ object JsonCodecs {
     val refs = mapper.createObjectNode()
     m.refs.toSeq.sortBy(_._1).foreach { case (k, r) => refs.set[ObjectNode](k, refToJson(r)) }
     o.set[ObjectNode]("refs", refs)
-
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(o)
+    o
   }
 
-  def metadataFromJson(json: String): Either[String, TableMetadata] = {
-    val n = parse(json)
+  /** The stored and mirrored form: [[metadataToNode]] pretty-printed. */
+  def metadataToJson(m: TableMetadata): String =
+    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(metadataToNode(m))
+
+  def metadataFromJson(json: String): Either[String, TableMetadata] =
+    metadataFromNode(parse(json))
+
+  def metadataFromNode(n: JsonNode): Either[String, TableMetadata] = {
+    if (n == null || !n.isObject)
+      return Left(s"malformed metadata node: ${String.valueOf(n).take(80)}")
     def arr(name: String): Iterator[JsonNode] =
       Option(n.get(name)).filter(!_.isNull).map(_.elements().asScala)
         .getOrElse(Iterator.empty)

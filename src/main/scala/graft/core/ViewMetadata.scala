@@ -267,7 +267,7 @@ object ViewJsonCodecs {
       Option(n.get("default-catalog")).filter(!_.isNull).map(_.asText()), ns)
   }
 
-  def metadataToJson(m: ViewMetadata): String = {
+  def metadataToNode(m: ViewMetadata): ObjectNode = {
     val o = M.createObjectNode()
     o.put("view-uuid", m.viewUuid.toString)
     o.put("format-version", m.formatVersion)
@@ -294,14 +294,22 @@ object ViewJsonCodecs {
     val props = M.createObjectNode()
     m.properties.toSeq.sortBy(_._1).foreach { case (k, v) => props.put(k, v) }
     o.set[JsonNode]("properties", props)
-    M.writeValueAsString(o)
+    o
   }
 
+  def metadataToJson(m: ViewMetadata): String = M.writeValueAsString(metadataToNode(m))
+
   def metadataFromJson(json: String): Either[String, ViewMetadata] = {
-    import scala.jdk.CollectionConverters._
     val n = try JsonCodecs.parse(json) catch {
       case e: Exception => return Left(s"malformed view metadata JSON: ${e.getMessage}")
     }
+    metadataFromNode(n)
+  }
+
+  def metadataFromNode(n: JsonNode): Either[String, ViewMetadata] = {
+    import scala.jdk.CollectionConverters._
+    if (n == null || !n.isObject)
+      return Left(s"malformed view metadata node: ${String.valueOf(n).take(80)}")
     def req(name: String): Either[String, JsonNode] =
       Option(n.get(name)).filter(!_.isNull).toRight(s"view metadata missing `$name`")
     for {

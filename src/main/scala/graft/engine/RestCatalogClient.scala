@@ -130,8 +130,7 @@ final class RestCatalogClient(baseUri: String) {
     val n = postJson(tableUri(prefix, ident), body)
     LoadedTable(
       Option(n.get("metadata-location")).map(_.asText()).filter(_.nonEmpty),
-      JsonCodecs.metadataFromJson(RestCodecs.render(n.get("metadata")))
-        .fold(e => throw CatalogError(500, "MalformedMetadata", e), identity))
+      decodeMetadata(n))
   }
 
   // -------------------------------------------------------------- views
@@ -184,7 +183,7 @@ final class RestCatalogClient(baseUri: String) {
   private def parseLoadedView(n: JsonNode): LoadedView =
     LoadedView(
       n.get("metadata-location").asText(),
-      ViewJsonCodecs.metadataFromJson(RestCodecs.render(n.get("metadata")))
+      ViewJsonCodecs.metadataFromNode(n.get("metadata"))
         .fold(e => throw CatalogError(500, "MalformedMetadata", e), identity))
 
   // ------------------------------------------------------------ helpers
@@ -198,8 +197,13 @@ final class RestCatalogClient(baseUri: String) {
   private def parseLoaded(n: JsonNode): LoadedTable =
     LoadedTable(
       Option(n.get("metadata-location")).filter(!_.isNull).map(_.asText()),
-      JsonCodecs.metadataFromJson(RestCodecs.render(n.get("metadata")))
-        .fold(e => throw CatalogError(500, "MalformedMetadata", e), identity))
+      decodeMetadata(n))
+
+  /** Decodes the response's `metadata` subtree in place: the body was
+    * parsed once, and the subtree is never rendered back to text. */
+  private def decodeMetadata(n: JsonNode): TableMetadata =
+    JsonCodecs.metadataFromNode(n.get("metadata"))
+      .fold(e => throw CatalogError(500, "MalformedMetadata", e), identity)
 
   private def getJson(uri: String): JsonNode =
     JsonCodecs.parse(send(HttpRequest.newBuilder(URI.create(uri)).GET().build()).body())

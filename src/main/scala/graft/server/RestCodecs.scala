@@ -142,7 +142,7 @@ object RestCodecs {
   def loadTableResponse(rec: TableRecord, config: Map[String, String] = Map.empty): String = {
     val o = objNode()
     rec.metadataLocation.foreach(o.put("metadata-location", _))
-    o.set[ObjectNode]("metadata", M.readTree(JsonCodecs.metadataToJson(rec.metadata)))
+    o.set[ObjectNode]("metadata", JsonCodecs.metadataToNode(rec.metadata))
     val cfg = objNode()
     config.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
     o.set[ObjectNode]("config", cfg)
@@ -382,7 +382,7 @@ object RestCodecs {
   def commitTableResponse(rec: TableRecord): String = {
     val o = objNode()
     o.put("metadata-location", rec.metadataLocation.getOrElse(""))
-    o.set[ObjectNode]("metadata", M.readTree(JsonCodecs.metadataToJson(rec.metadata)))
+    o.set[ObjectNode]("metadata", JsonCodecs.metadataToNode(rec.metadata))
     render(o)
   }
 
@@ -447,8 +447,7 @@ object RestCodecs {
   def loadViewResponse(rec: ViewRecord): String = {
     val o = objNode()
     o.put("metadata-location", rec.metadataLocation)
-    o.set[ObjectNode]("metadata",
-      M.readTree(ViewJsonCodecs.metadataToJson(rec.metadata)))
+    o.set[ObjectNode]("metadata", ViewJsonCodecs.metadataToNode(rec.metadata))
     render(o)
   }
 

@@ -70,6 +70,113 @@ class JdbcCatalogStoreSpec extends CatalogStoreContract {
       Seq(ViewUpdate.SetProperties(Map("tier" -> "gold"))), t0 + 4).isRight)
   }
 
+  // ------------------------------------------ parsed-metadata cache
+  private val cacheT0 = 1700000000000L
+  private val cacheSchema = {
+    import IType._
+    Schema(0, Seq(NestedField.required(1, "id", TInt)))
+  }
+
+  /** A store over a fresh database with one warehouse and namespace `ns`. */
+  private def cacheFixture(dir: java.nio.file.Path): (JdbcCatalogStore, UUID) = {
+    val store = JdbcCatalogStore.embedded(dir)
+    val whLoc = Files.createTempDirectory("graft-wh").toUri.toString.stripSuffix("/")
+    val wh = store.createWarehouse(UUID.randomUUID(), "wh", whLoc)
+      .fold(e => fail(e.message), identity).id
+    assert(store.createNamespace(wh, Seq("ns"), Map.empty).isRight)
+    (store, wh)
+  }
+
+  private def createCached(store: CatalogStore, wh: UUID, name: String,
+      staged: Boolean = false): TableRecord =
+    store.createTable(wh, Seq("ns"), name, cacheSchema, UnboundPartitionSpec.Unpartitioned,
+      None, Map.empty, stageCreate = staged, timestampMs = cacheT0)
+      .fold(e => fail(e.message), identity)
+
+  private def append(store: CatalogStore, wh: UUID, ident: TableIdent,
+      parent: Option[Long], id: Long): Either[CatalogError, TableRecord] =
+    store.commitTable(wh, ident,
+      Seq(TableRequirement.AssertRefSnapshotId("main", parent)),
+      Seq(TableUpdate.AddSnapshot(Snapshot(id, parent, id, cacheT0 + id,
+        s"manifests/$id.avro", Map("operation" -> "append"), Some(0))),
+        TableUpdate.SetSnapshotRef("main", id, SnapshotRefType.Branch)),
+      cacheT0 + id)
+
+  test("parsed-metadata cache: a commit through a second store on one DB is seen by the next load") {
+    val dir = Files.createTempDirectory("graft-derby-shared").resolve("db")
+    val (a, wh) = cacheFixture(dir)
+    val b = JdbcCatalogStore.embedded(dir)
+    val ident = TableIdent(Seq("ns"), "t")
+    createCached(a, wh, "t")
+    val first = a.loadTable(wh, ident).fold(e => fail(e.message), identity)
+    assert(a.cachedMetadataLocations.contains(first.metadataLocation.get))
+
+    val viaB = append(b, wh, ident, None, 1L).fold(e => fail(e.message), identity)
+    val seenByA = a.loadTable(wh, ident).fold(e => fail(e.message), identity)
+    assert(seenByA.metadataLocation === viaB.metadataLocation)
+    assert(seenByA.metadata === viaB.metadata)
+    assert(seenByA.metadata.currentSnapshotId === Some(1L))
+
+    // A commits on top of B's version; B, holding its own older entry,
+    // loads A's version and a stale writer through B still gets 409
+    val viaA = append(a, wh, ident, Some(1L), 2L).fold(e => fail(e.message), identity)
+    assert(b.loadTable(wh, ident).map(_.metadata) === Right(viaA.metadata))
+    assert(append(b, wh, ident, Some(1L), 3L).left.exists(_.code === 409))
+    assert(a.loadTable(wh, ident).map(_.metadata.currentSnapshotId) === Right(Some(2L)))
+  }
+
+  test("parsed-metadata cache: staged rows (no metadata location) are never cached") {
+    val (store, wh) = cacheFixture(
+      Files.createTempDirectory("graft-derby-staged").resolve("db"))
+    val ident = TableIdent(Seq("ns"), "staged")
+    createCached(store, wh, "staged", staged = true)
+    assert(store.loadTable(wh, ident).left.exists(_.code === 404))
+    assert(store.tableExists(wh, ident) === Right(false))
+    assert(store.cachedMetadataLocations.isEmpty)
+
+    // finalizing the staged table caches the location it wrote, only that
+    val done = append(store, wh, ident, None, 1L).fold(e => fail(e.message), identity)
+    assert(store.cachedMetadataLocations === done.metadataLocation.toSet)
+  }
+
+  test("parsed-metadata cache: loading more tables than the bound stays within it") {
+    val (store, wh) = cacheFixture(
+      Files.createTempDirectory("graft-derby-bound").resolve("db"))
+    val bound = JdbcCatalogStore.MetadataCacheEntries
+    val names = (0 until bound + 8).map(i => f"t$i%03d")
+    val created = names.map(n => n -> createCached(store, wh, n)).toMap
+    names.foreach { n =>
+      assert(store.loadTable(wh, TableIdent(Seq("ns"), n)).map(_.metadataLocation) ===
+        Right(created(n).metadataLocation))
+      assert(store.cachedMetadataLocations.size <= bound)
+    }
+    assert(store.cachedMetadataLocations.size === bound)
+    // least recently used went first; reloading an evicted table re-parses it
+    assert(!store.cachedMetadataLocations.contains(created(names.head).metadataLocation.get))
+    assert(store.cachedMetadataLocations.contains(created(names.last).metadataLocation.get))
+    assert(store.loadTable(wh, TableIdent(Seq("ns"), names.head)).map(_.metadata) ===
+      Right(created(names.head).metadata))
+    assert(store.cachedMetadataLocations.size === bound)
+  }
+
+  test("parsed-metadata cache: a commit drops the location it replaced") {
+    val (store, wh) = cacheFixture(
+      Files.createTempDirectory("graft-derby-replace").resolve("db"))
+    val ident = TableIdent(Seq("ns"), "t")
+    val created = createCached(store, wh, "t")
+    assert(store.loadTable(wh, ident).isRight)
+    val old = created.metadataLocation.get
+    assert(store.cachedMetadataLocations === Set(old))
+
+    val next = append(store, wh, ident, None, 1L).fold(e => fail(e.message), identity)
+    assert(store.cachedMetadataLocations === next.metadataLocation.toSet)
+    assert(!store.cachedMetadataLocations.contains(old))
+    assert(store.loadTable(wh, ident).map(_.metadata) === Right(next.metadata))
+    // a refused commit leaves the cache as it was
+    assert(append(store, wh, ident, None, 2L).left.exists(_.code === 409))
+    assert(store.cachedMetadataLocations === next.metadataLocation.toSet)
+  }
+
   private def schemaOf(s: CatalogStore): Schema = {
     import IType._
     Schema(0, Seq(NestedField.required(1, "one", TInt)))
