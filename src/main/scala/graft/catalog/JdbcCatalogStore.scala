@@ -10,10 +10,19 @@ import scala.jdk.CollectionConverters._
 /** Durable [[CatalogStore]] over embedded JDBC (Derby) — the role the
   * reference's Postgres layer plays (implementations/postgres/
   * table.rs:639-852, migrations/05_table.sql), re-expressed: rows hold
-  * identity + a JSON metadata document (their JSONB column), commits
-  * run inside a real DB transaction with `SELECT ... FOR UPDATE` row
-  * locks so requirement asserts and the swap share one critical
-  * section, and a server restart loses nothing.
+  * identity + the table's metadata document, commits run inside a real
+  * DB transaction with `SELECT ... FOR UPDATE` row locks so requirement
+  * asserts and the swap share one critical section, and a server
+  * restart loses nothing.
+  *
+  * Row bytes: `tbls.metadata` holds the gzip'd JSON of the version
+  * ([[MetadataIO.encode]]). Create and commit encode and gzip each
+  * version once and hand the same bytes to the file at
+  * `metadata_location` and to the row; register encodes the document it
+  * adopted once for the row. A 1 MB document is about 100 KB gzip'd,
+  * and Derby's cost to update the column follows its size.
+  * Databases written with the older text column are converted on open
+  * (see `upgradeTableMetadataColumn`).
   *
   * Concurrency model: reads use per-operation auto-commit connections
   * (no global monitor — unlike [[InMemoryCatalogStore]], readers never
@@ -30,13 +39,13 @@ import scala.jdk.CollectionConverters._
   * time and never rewrite an old one; register adopts the document read
   * from the file it names. So each store keeps a bounded map from
   * location to parsed [[TableMetadata]] ([[JdbcCatalogStore.MetadataCacheEntries]]
-  * entries, least recently used evicted), and a row read parses its
-  * metadata CLOB only when the row's location is not in the map. The
-  * location itself is always read from the row, under the same isolation
-  * as before, so a cached entry can never stand in for a newer row, even
-  * with several servers on one database. Staged rows (no location) are
-  * never cached; a commit records the version it wrote after its DB
-  * COMMIT and drops the one it replaced.
+  * entries, least recently used evicted), and a row read gunzips and
+  * parses its metadata bytes only when the row's location is not in the
+  * map. The location itself is always read from the row, under the same
+  * isolation as before, so a cached entry can never stand in for a newer
+  * row, even with several servers on one database. Staged rows (no
+  * location) are never cached; a commit records the version it wrote
+  * after its DB COMMIT and drops the one it replaced.
   *
   * Derby stands in for Postgres because it ships with Spark; the SQL is
   * vanilla enough that a postgres:// URL needs only the DDL tweaked.
@@ -84,7 +93,7 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
           |  ns VARCHAR(1024) NOT NULL,
           |  name VARCHAR(255) NOT NULL,
           |  table_id VARCHAR(36) NOT NULL,
-          |  metadata CLOB NOT NULL,
+          |  metadata BLOB NOT NULL,
           |  metadata_location VARCHAR(2048),
           |  table_location VARCHAR(2048) NOT NULL,
           |  PRIMARY KEY (wh, ns, name))""".stripMargin,
@@ -105,10 +114,41 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
           |  view_location VARCHAR(2048) NOT NULL,
           |  PRIMARY KEY (wh, ns, name))""".stripMargin)
       ddl.foreach { sql =>
-        try { val st = c.createStatement(); try st.execute(sql) finally st.close() }
+        try execute(c, sql)
         catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
       }
+      upgradeTableMetadataColumn(c)
     }
+  }
+
+  /** A database written before the row held gzip bytes has
+    * `tbls.metadata` as a CLOB of JSON text. Convert it in place, in one
+    * transaction: gzip each row's text into a new BLOB column, drop the
+    * CLOB, and take over its name. The gzip of the text is the file's
+    * bytes, since both came from one encode. */
+  private def upgradeTableMetadataColumn(c: Connection): Unit = {
+    val cols = c.getMetaData.getColumns(null, c.getSchema, "TBLS", "METADATA")
+    val isClob = try cols.next() && cols.getString("TYPE_NAME") == "CLOB" finally cols.close()
+    if (!isClob) return
+    c.setAutoCommit(false)
+    try {
+      execute(c, "ALTER TABLE tbls ADD COLUMN metadata_gz BLOB")
+      // one document in memory at a time: keys first, then row by row
+      val keys = query(c, "SELECT wh, ns, name FROM tbls", Nil)(rs =>
+        Seq[AnyRef](rs.getString(1), rs.getString(2), rs.getString(3)))
+      keys.foreach { key =>
+        val json = query(c,
+          "SELECT metadata FROM tbls WHERE wh = ? AND ns = ? AND name = ?", key)(_.getString(1))
+        update(c, "UPDATE tbls SET metadata_gz = ? WHERE wh = ? AND ns = ? AND name = ?",
+          MetadataIO.gzip(json.head) +: key)
+      }
+      execute(c, "ALTER TABLE tbls DROP COLUMN metadata")
+      execute(c, "RENAME COLUMN tbls.metadata_gz TO metadata")
+      execute(c, "ALTER TABLE tbls ALTER COLUMN metadata NOT NULL")
+      c.commit()
+    } catch {
+      case e: Throwable => c.rollback(); throw e
+    } finally c.setAutoCommit(true)
   }
 
   private def withConn[A](f: Connection => A): A = {
@@ -377,12 +417,12 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
       ).left.map(fromCommit)
       metadata <- builder.build().left.map(fromCommit)
     } yield {
-      val json = JsonCodecs.metadataToJson(metadata)
+      val bytes = MetadataIO.encode(metadata)
       val metadataLocation =
         if (stageCreate) None
         else {
           val loc = newMetadataLocation(location)
-          MetadataIO.writeJson(loc, json)
+          MetadataIO.writeBytes(loc, bytes)
           Some(loc)
         }
       val rec = TableRecord(tableId, ns, name, metadata, metadataLocation, location)
@@ -395,7 +435,7 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
         if (existing.isDefined)
           update(c, "DELETE FROM tbls WHERE wh = ? AND ns = ? AND name = ?",
             Seq(wh.toString, encodeNs(ns), name))
-        insertTable(c, wh, rec, json)
+        insertTable(c, wh, rec, bytes)
         c.commit()
       } catch {
         case e: java.sql.SQLException if e.getSQLState == "23505" =>
@@ -408,11 +448,14 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
     }
   }
 
-  /** `json` is `metadataToJson(rec.metadata)`, encoded once by the caller. */
-  private def insertTable(c: Connection, wh: UUID, rec: TableRecord, json: String): Unit =
-    update(c, "INSERT INTO tbls VALUES (?,?,?,?,?,?,?)", Seq(
+  /** `bytes` is `MetadataIO.encode(rec.metadata)`, encoded once by the
+    * caller. Columns are named: an upgraded table has them in another
+    * order. */
+  private def insertTable(c: Connection, wh: UUID, rec: TableRecord, bytes: Array[Byte]): Unit =
+    update(c, "INSERT INTO tbls (wh, ns, name, table_id, metadata, metadata_location, " +
+      "table_location) VALUES (?,?,?,?,?,?,?)", Seq(
       wh.toString, encodeNs(rec.namespace), rec.name, rec.tableId.toString,
-      json, rec.metadataLocation.orNull, rec.tableLocation))
+      bytes, rec.metadataLocation.orNull, rec.tableLocation))
 
   private def newMetadataLocation(tableLocation: String): String =
     s"$tableLocation/metadata/${UUID.randomUUID()}.gz.metadata.json"
@@ -447,7 +490,7 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
         if (existing.isDefined)
           update(c, "DELETE FROM tbls WHERE wh = ? AND ns = ? AND name = ?",
             Seq(wh.toString, encodeNs(ns), name))
-        insertTable(c, wh, rec, JsonCodecs.metadataToJson(metadata))
+        insertTable(c, wh, rec, MetadataIO.encode(metadata))
         c.commit()
       } catch {
         // name PK or the (wh, table_id) unique index — the latter is
@@ -581,15 +624,16 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
           }
         }
 
-        // Phase 2 — encode each version once, write its metadata file
-        // and swap its row; the DB COMMIT is the atomic visibility point.
+        // Phase 2 — encode and gzip each version once, write those
+        // bytes to its metadata file and its row; the DB COMMIT is the
+        // atomic visibility point.
         val results = applied.result()
         results.foreach { case (id, _, rec) =>
-          val json = JsonCodecs.metadataToJson(rec.metadata)
-          MetadataIO.writeJson(rec.metadataLocation.get, json)
+          val bytes = MetadataIO.encode(rec.metadata)
+          MetadataIO.writeBytes(rec.metadataLocation.get, bytes)
           update(c,
             "UPDATE tbls SET metadata = ?, metadata_location = ? WHERE wh = ? AND ns = ? AND name = ?",
-            Seq(json, rec.metadataLocation.get,
+            Seq(bytes, rec.metadataLocation.get,
               wh.toString, encodeNs(id.namespace), id.name))
         }
         c.commit()
@@ -773,7 +817,7 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
     withConn { c =>
       activeWarehouse(c, wh).flatMap { _ =>
         // prefix-match on the slim identity columns only; the metadata
-        // CLOB of the single winner is parsed afterwards — the lookup
+        // of the single winner is parsed afterwards — the lookup
         // never deserializes the warehouse's whole metadata
         query(c,
           "SELECT ns, name, table_location FROM tbls WHERE wh = ? AND metadata_location IS NOT NULL",
@@ -805,12 +849,12 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
     } finally ps.close()
   }
 
-  /** Reads the metadata CLOB only when the row's location misses the
+  /** Reads the metadata bytes only when the row's location misses the
     * parsed-metadata cache. */
   private def readTable(rs: ResultSet): TableRecord = {
     val location = Option(rs.getString("metadata_location"))
     val metadata = location.flatMap(l => Option(parsedMetadata.get(l))).getOrElse {
-      val m = JsonCodecs.metadataFromJson(rs.getString("metadata"))
+      val m = MetadataIO.decode(rs.getBytes("metadata"))
         .fold(e => sys.error(s"corrupt metadata row: $e"), identity)
       location.foreach(parsedMetadata.put(_, m))
       m
@@ -846,6 +890,11 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
         out.result()
       } finally rs.close()
     } finally ps.close()
+  }
+
+  private def execute(c: Connection, sql: String): Unit = {
+    val st = c.createStatement()
+    try st.execute(sql) finally st.close()
   }
 
   private def update(c: Connection, sql: String, args: Seq[AnyRef]): Int = {

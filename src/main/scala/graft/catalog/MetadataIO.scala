@@ -25,73 +25,62 @@ object MetadataIO {
   def isWritable(location: String): Boolean = FileIO.canHandle(location)
 
   def write(location: String, metadata: TableMetadata): Unit =
-    writeJson(location, JsonCodecs.metadataToJson(metadata))
+    writeBytes(location, encode(metadata))
 
-  /** Writes an already-encoded `metadataToJson` document, for callers
-    * that also store the same string in the catalog row. */
-  def writeJson(location: String, json: String): Unit = {
-    if (!isWritable(location)) return
+  /** The metadata file's bytes: `metadataToJson`, gzip'd. The JDBC store
+    * keeps the same bytes in its row. */
+  def encode(metadata: TableMetadata): Array[Byte] =
+    gzip(JsonCodecs.metadataToJson(metadata))
+
+  /** Inverse of [[encode]] (also accepts plain JSON). */
+  def decode(bytes: Array[Byte]): Either[String, TableMetadata] =
+    JsonCodecs.metadataFromJson(text(bytes))
+
+  /** Writes bytes from [[encode]], for callers that also keep them. */
+  def writeBytes(location: String, bytes: Array[Byte]): Unit =
+    if (isWritable(location)) FileIO.forLocation(location).write(location, bytes)
+
+  // adoption seam: decode, then SEMANTIC validation — a hostile tree can
+  // be well-shaped JSON and still structurally impossible (duplicate
+  // field ids, snapshot parent cycles, out-of-range sequence numbers);
+  // both layers answer Left → 400
+  def read(location: String): Either[String, TableMetadata] =
+    readText(location).flatMap(JsonCodecs.metadataFromJson)
+      .flatMap(JsonCodecs.validateAdopted)
+
+  private[catalog] def gzip(json: String): Array[Byte] = {
     val buf = new ByteArrayOutputStream()
     val out = new GZIPOutputStream(buf)
     try out.write(json.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    FileIO.forLocation(location).write(location, buf.toByteArray)
+    buf.toByteArray
   }
 
-  def read(location: String): Either[String, TableMetadata] = {
+  /** gzip-sniff instead of trusting the extension: our own mirrors are
+    * gzip'd, but register must also accept the PLAIN `*.metadata.json`
+    * every other Iceberg writer produces. */
+  private[catalog] def text(bytes: Array[Byte]): String =
+    if (bytes.length >= 2 &&
+        (bytes(0) & 0xff) == 0x1f && (bytes(1) & 0xff) == 0x8b) {
+      val in = new GZIPInputStream(new ByteArrayInputStream(bytes))
+      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+      finally in.close()
+    } else new String(bytes, StandardCharsets.UTF_8)
+
+  private[catalog] def readText(location: String): Either[String, String] =
     if (!FileIO.canHandle(location))
-      return Left(s"no storage backend registered for metadata location: $location")
-    FileIO.forLocation(location).read(location) match {
-      case None => Left(s"metadata file not found: $location")
-      case Some(bytes) =>
-        // gzip-sniff instead of trusting the extension: our own mirrors
-        // are gzip'd, but register must also accept the PLAIN
-        // `*.metadata.json` every other Iceberg writer produces
-        val text =
-          if (bytes.length >= 2 &&
-              (bytes(0) & 0xff) == 0x1f && (bytes(1) & 0xff) == 0x8b) {
-            val in = new GZIPInputStream(new ByteArrayInputStream(bytes))
-            try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-            finally in.close()
-          } else new String(bytes, StandardCharsets.UTF_8)
-        // adoption seam: decode, then SEMANTIC validation — a hostile
-        // tree can be well-shaped JSON and still structurally
-        // impossible (duplicate field ids, snapshot parent cycles,
-        // out-of-range sequence numbers); both layers answer Left → 400
-        JsonCodecs.metadataFromJson(text)
-          .flatMap(JsonCodecs.validateAdopted)
-    }
-  }
+      Left(s"no storage backend registered for metadata location: $location")
+    else FileIO.forLocation(location).read(location).map(text)
+      .toRight(s"metadata file not found: $location")
 }
 
 /** View-metadata twin of [[MetadataIO]]: same gzip mirror + sniffing
   * rules, the view-spec codec instead of the table one. */
 object ViewMetadataIO {
 
-  def write(location: String, metadata: ViewMetadata): Unit = {
-    if (!FileIO.canHandle(location)) return
-    val buf = new ByteArrayOutputStream()
-    val out = new GZIPOutputStream(buf)
-    try out.write(
-      ViewJsonCodecs.metadataToJson(metadata).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    FileIO.forLocation(location).write(location, buf.toByteArray)
-  }
+  def write(location: String, metadata: ViewMetadata): Unit =
+    MetadataIO.writeBytes(location, MetadataIO.gzip(ViewJsonCodecs.metadataToJson(metadata)))
 
-  def read(location: String): Either[String, ViewMetadata] = {
-    if (!FileIO.canHandle(location))
-      return Left(s"no storage backend registered for metadata location: $location")
-    FileIO.forLocation(location).read(location) match {
-      case None => Left(s"metadata file not found: $location")
-      case Some(bytes) =>
-        val text =
-          if (bytes.length >= 2 &&
-              (bytes(0) & 0xff) == 0x1f && (bytes(1) & 0xff) == 0x8b) {
-            val in = new GZIPInputStream(new ByteArrayInputStream(bytes))
-            try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-            finally in.close()
-          } else new String(bytes, StandardCharsets.UTF_8)
-        ViewJsonCodecs.metadataFromJson(text)
-    }
-  }
+  def read(location: String): Either[String, ViewMetadata] =
+    MetadataIO.readText(location).flatMap(ViewJsonCodecs.metadataFromJson)
 }

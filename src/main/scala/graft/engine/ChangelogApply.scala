@@ -360,6 +360,19 @@ object ChangelogApply {
   private[engine] def ckptKey(sourceName: String): String =
     s"graft.materialization.$sourceName.source-snapshot"
 
+  /** The checkpoint `target` records for `sourceName`, kept only while
+    * it is still in `source`'s current lineage. expire_snapshots (or a
+    * rollback) can remove it, and no changelog starts from a snapshot
+    * that is gone; None routes the tick to the full recompute, which
+    * re-stamps the checkpoint at the head. */
+  private[engine] def liveCheckpoint(target: graft.core.TableMetadata,
+      sourceName: String, source: graft.core.TableMetadata): Option[Long] =
+    target.properties.get(ckptKey(sourceName)).flatMap(_.toLongOption).filter { c =>
+      Iterator.iterate(source.currentSnapshot)(
+        _.flatMap(_.parentSnapshotId).flatMap(source.snapshots.get))
+        .takeWhile(_.isDefined).exists(_.exists(_.snapshotId == c))
+    }
+
   /** ONE maintenance tick of a continuously-maintained aggregate
     * table: fold the source's changes since the target's recorded
     * checkpoint into the target, committing the updated content AND
@@ -435,11 +448,12 @@ object ChangelogApply {
       keys: Seq[String])(
       incremental: (DataFrame, DataFrame, DataFrame) => DataFrame,
       cold: DataFrame => DataFrame): Option[Long] = {
-    val srcHead = source.metadata.currentSnapshotId.getOrElse(return None)
+    val srcMeta = source.metadata
+    val srcHead = srcMeta.currentSnapshotId.getOrElse(return None)
     val tgtMeta = target.metadata
     val key = ckptKey(sourceName)
     val baseAtHead = source.scan(spark, source.AtSnapshot(srcHead))
-    tgtMeta.properties.get(key).flatMap(_.toLongOption) match {
+    liveCheckpoint(tgtMeta, sourceName, srcMeta) match {
       case Some(c) if c == srcHead => None // already current
       case Some(c) =>
         val changes = source.changelogScan(spark, c, Some(srcHead))

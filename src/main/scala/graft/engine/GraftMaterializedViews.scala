@@ -392,9 +392,10 @@ object GraftMaterializedViews {
     shapeOf(spark, analyzed).map(_.withOutNames(outNames)) match {
       case Some(shape) =>
         val source = shape.sourceTable(spark)
-        val srcHead = source.metadata.currentSnapshotId.getOrElse(return NoOp)
+        val srcMeta = source.metadata
+        val srcHead = srcMeta.currentSnapshotId.getOrElse(return NoOp)
         val key = ChangelogApply.ckptKey(shape.sourceName)
-        meta.properties.get(key).flatMap(_.toLongOption) match {
+        ChangelogApply.liveCheckpoint(meta, shape.sourceName, srcMeta) match {
           case Some(c) if c == srcHead => NoOp
           case Some(c) =>
             val changes = shape.applyFilter(
@@ -541,8 +542,10 @@ object GraftMaterializedViews {
     val meta = mv.metadata
     val lt = rj.table(spark, rj.leftIdent)
     val rt = rj.table(spark, rj.rightIdent)
-    val lHead = lt.metadata.currentSnapshotId
-    val rHead = rt.metadata.currentSnapshotId
+    val lMeta = lt.metadata
+    val rMeta = rt.metadata
+    val lHead = lMeta.currentSnapshotId
+    val rHead = rMeta.currentSnapshotId
     val kL = ChangelogApply.ckptKey(rj.leftName)
     val kR = ChangelogApply.ckptKey(rj.rightName)
     def headMark(h: Option[Long]): String = h.map(_.toString).getOrElse("none")
@@ -565,8 +568,8 @@ object GraftMaterializedViews {
       Full
     }
 
-    val ckL = meta.properties.get(kL).flatMap(_.toLongOption)
-    val ckR = meta.properties.get(kR).flatMap(_.toLongOption)
+    val ckL = ChangelogApply.liveCheckpoint(meta, rj.leftName, lMeta)
+    val ckR = ChangelogApply.liveCheckpoint(meta, rj.rightName, rMeta)
     (ckL, ckR, lHead, rHead) match {
       case (Some(cl), Some(cr), Some(lh), Some(rh)) =>
         // changelog rows as PLAIN source rows: for touched-key
@@ -646,9 +649,10 @@ object GraftMaterializedViews {
       spark: SparkSession, mv: GraftTable, rs: RebuildShape): RefreshMode = {
     val meta = mv.metadata
     val source = rs.sourceTable(spark)
-    val srcHead = source.metadata.currentSnapshotId.getOrElse(return NoOp)
+    val srcMeta = source.metadata
+    val srcHead = srcMeta.currentSnapshotId.getOrElse(return NoOp)
     val key = ChangelogApply.ckptKey(rs.sourceName)
-    meta.properties.get(key).flatMap(_.toLongOption) match {
+    ChangelogApply.liveCheckpoint(meta, rs.sourceName, srcMeta) match {
       case Some(c) if c == srcHead => NoOp
       case Some(c) =>
         val changes = source.changelogScan(spark, c, Some(srcHead))
@@ -696,13 +700,15 @@ object GraftMaterializedViews {
     val meta = mv.metadata
     val lt = js.table(spark, js.leftIdent)
     val rt = js.table(spark, js.rightIdent)
-    val lHead = lt.metadata.currentSnapshotId
-    val rHead = rt.metadata.currentSnapshotId
+    val lMeta = lt.metadata
+    val rMeta = rt.metadata
+    val lHead = lMeta.currentSnapshotId
+    val rHead = rMeta.currentSnapshotId
     if (lHead.isEmpty && rHead.isEmpty) return NoOp // both empty: joined result is empty
     val kL = ChangelogApply.ckptKey(js.leftName)
     val kR = ChangelogApply.ckptKey(js.rightName)
-    val ckL = meta.properties.get(kL).flatMap(_.toLongOption)
-    val ckR = meta.properties.get(kR).flatMap(_.toLongOption)
+    val ckL = ChangelogApply.liveCheckpoint(meta, js.leftName, lMeta)
+    val ckR = ChangelogApply.liveCheckpoint(meta, js.rightName, rMeta)
     // an absent head checkpoints as an explicit marker — otherwise a
     // persistently-empty side would fail the currency check and commit
     // a fresh (empty, identical) overwrite snapshot EVERY tick
@@ -2051,9 +2057,10 @@ object GraftMaterializedViews {
       spark: SparkSession, mv: GraftTable, re: RebuildExprShape): RefreshMode = {
     val meta = mv.metadata
     val source = re.sourceTable(spark)
-    val srcHead = source.metadata.currentSnapshotId.getOrElse(return NoOp)
+    val srcMeta = source.metadata
+    val srcHead = srcMeta.currentSnapshotId.getOrElse(return NoOp)
     val key = ChangelogApply.ckptKey(re.sourceName)
-    meta.properties.get(key).flatMap(_.toLongOption) match {
+    ChangelogApply.liveCheckpoint(meta, re.sourceName, srcMeta) match {
       case Some(c) if c == srcHead => NoOp
       case Some(c) =>
         val plainChanges = source.changelogScan(spark, c, Some(srcHead))
@@ -2254,8 +2261,10 @@ object GraftMaterializedViews {
     val meta = mv.metadata
     val lt = rx.table(spark, rx.leftIdent)
     val rt = rx.table(spark, rx.rightIdent)
-    val lHead = lt.metadata.currentSnapshotId
-    val rHead = rt.metadata.currentSnapshotId
+    val lMeta = lt.metadata
+    val rMeta = rt.metadata
+    val lHead = lMeta.currentSnapshotId
+    val rHead = rMeta.currentSnapshotId
     val kL = ChangelogApply.ckptKey(rx.leftName)
     val kR = ChangelogApply.ckptKey(rx.rightName)
     def headMark(h: Option[Long]): String = h.map(_.toString).getOrElse("none")
@@ -2275,8 +2284,8 @@ object GraftMaterializedViews {
       Full
     }
 
-    val ckL = meta.properties.get(kL).flatMap(_.toLongOption)
-    val ckR = meta.properties.get(kR).flatMap(_.toLongOption)
+    val ckL = ChangelogApply.liveCheckpoint(meta, rx.leftName, lMeta)
+    val ckR = ChangelogApply.liveCheckpoint(meta, rx.rightName, rMeta)
     (ckL, ckR, lHead, rHead) match {
       case (Some(cl), Some(cr), Some(lh), Some(rh)) =>
         def plainRows(t: GraftTable, from: Long, to: Long, rel: DataSourceV2Relation) =
@@ -2723,7 +2732,8 @@ object GraftMaterializedViews {
     val names = rm.idents.map(rm.nameOf)
     val distinctIdents = rm.idents.zip(names).distinctBy(_._2)
     val tables = distinctIdents.map { case (ti, n) => n -> rm.table(spark, ti) }.toMap
-    val heads = tables.map { case (n, t) => n -> t.metadata.currentSnapshotId }
+    val metas = tables.map { case (n, t) => n -> t.metadata }
+    val heads = metas.map { case (n, m) => n -> m.currentSnapshotId }
     def headMark(h: Option[Long]): String = h.map(_.toString).getOrElse("none")
     val ckpts = heads.map { case (n, h) =>
       ChangelogApply.ckptKey(n) -> headMark(h)
@@ -2744,7 +2754,7 @@ object GraftMaterializedViews {
     }
 
     val parsed = heads.map { case (n, h) =>
-      n -> (meta.properties.get(ChangelogApply.ckptKey(n)).flatMap(_.toLongOption), h)
+      n -> (ChangelogApply.liveCheckpoint(meta, n, metas(n)), h)
     }
     if (!parsed.forall { case (_, (c, h)) => c.isDefined && h.isDefined })
       return fullAtHeads() // a checkpoint missing or a table headless
@@ -3365,7 +3375,8 @@ object GraftMaterializedViews {
     val names = rc.idents.map(rc.nameOf)
     val distinctIdents = rc.idents.zip(names).distinctBy(_._2)
     val tables = distinctIdents.map { case (ti, n) => n -> rc.table(spark, ti) }.toMap
-    val heads = tables.map { case (n, t) => n -> t.metadata.currentSnapshotId }
+    val metas = tables.map { case (n, t) => n -> t.metadata }
+    val heads = metas.map { case (n, m) => n -> m.currentSnapshotId }
     def headMark(h: Option[Long]): String = h.map(_.toString).getOrElse("none")
     val ckpts = heads.map { case (n, h) =>
       ChangelogApply.ckptKey(n) -> headMark(h)
@@ -3386,7 +3397,7 @@ object GraftMaterializedViews {
     }
 
     val parsed = heads.map { case (n, h) =>
-      n -> (meta.properties.get(ChangelogApply.ckptKey(n)).flatMap(_.toLongOption), h)
+      n -> (ChangelogApply.liveCheckpoint(meta, n, metas(n)), h)
     }
     if (!parsed.forall { case (_, (c, h)) => c.isDefined && h.isDefined })
       return fullAtHeads() // a checkpoint missing or a table headless

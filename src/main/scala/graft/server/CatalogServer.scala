@@ -40,7 +40,9 @@ final class CatalogServer(
       * loopback + bound port (correct for tests/dev). */
     advertisedUri: Option[String] = None) {
   import graft.service.CatalogEvent
+  import CatalogServer._
 
+  TcpNoDelay.ensureSet()
   private val server: HttpServer = HttpServer.create(new InetSocketAddress(bindHost, port), 0)
   // keep the handle: HttpServer.stop does NOT shut down a user-supplied
   // executor, and its non-daemon workers would pin an embedding JVM
@@ -93,8 +95,14 @@ final class CatalogServer(
         respond(ex, if (body.isEmpty) 204 else 200, body)
     }
 
-  private def readBody(ex: HttpExchange): String =
-    new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+  /** The request body, or 413 when it is longer than [[MaxRequestBodyBytes]]. */
+  private def readBody(ex: HttpExchange): String = {
+    val bytes = ex.getRequestBody.readNBytes(MaxRequestBodyBytes + 1)
+    if (bytes.length > MaxRequestBodyBytes)
+      throw CatalogError(413, "RequestEntityTooLarge",
+        s"request body exceeds $MaxRequestBodyBytes bytes")
+    new String(bytes, StandardCharsets.UTF_8)
+  }
 
   private def queryParams(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).map(_.split("&").toSeq.flatMap { kv =>
@@ -765,4 +773,28 @@ final class CatalogServer(
         respond(ex, 200, RestCodecs.listProjectsResponse(store.listProjects()))
       case _ => respondError(ex, CatalogError.notFound("NotFound", "no such route"))
     }
+}
+
+object CatalogServer {
+
+  /** Longest request body a route reads. Clients send updates, never a
+    * table's whole metadata document, and even that document is about
+    * 1.1 MB of JSON at 2000 snapshots; 8 MiB leaves room for a
+    * multi-table transaction of large updates while a runaway or hostile
+    * body cannot make a handler buffer without bound. */
+  private[server] val MaxRequestBodyBytes: Int = 8 << 20
+
+  /** Every server socket runs with TCP_NODELAY. With Nagle on, a reply
+    * shorter than one loopback segment (about 64 KB) waits for the
+    * client's delayed ACK, about 40 ms per round trip. The JDK's
+    * `HttpServer` reads `sun.net.httpserver.nodelay` once per JVM, when
+    * its first server is created, so the property must be set before
+    * that; every `CatalogServer` touches this object in its constructor,
+    * which covers `ServerMain`, `ForeignReaderFixture` and
+    * `ScalingRehearsal`. A JVM that created some other `HttpServer`
+    * first keeps that setting. */
+  private object TcpNoDelay {
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+    def ensureSet(): Unit = ()
+  }
 }

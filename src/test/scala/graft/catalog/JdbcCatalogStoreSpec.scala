@@ -177,6 +177,92 @@ class JdbcCatalogStoreSpec extends CatalogStoreContract {
     assert(store.cachedMetadataLocations === next.metadataLocation.toSet)
   }
 
+  // ---------------------------------------------------------- row bytes
+  private def rowBytes(dir: java.nio.file.Path, name: String): (Array[Byte], String) = {
+    val c = java.sql.DriverManager.getConnection(s"jdbc:derby:${dir.toAbsolutePath}")
+    try {
+      val ps = c.prepareStatement("SELECT metadata, metadata_location FROM tbls WHERE name = ?")
+      ps.setString(1, name)
+      val rs = ps.executeQuery()
+      assert(rs.next())
+      (rs.getBytes(1), rs.getString(2))
+    } finally c.close()
+  }
+
+  test("row bytes: each create and commit stores exactly the file's gzip bytes") {
+    val dir = Files.createTempDirectory("graft-derby-bytes").resolve("db")
+    val (store, wh) = cacheFixture(dir)
+    val ident = TableIdent(Seq("ns"), "t")
+    def check(rec: TableRecord): Unit = {
+      val (bytes, loc) = rowBytes(dir, "t")
+      assert(rec.metadataLocation.contains(loc))
+      assert(bytes.sameElements(Files.readAllBytes(MetadataIO.toPath(loc))))
+      assert(MetadataIO.decode(bytes) === Right(rec.metadata))
+      assert((bytes(0) & 0xff) === 0x1f && (bytes(1) & 0xff) === 0x8b)
+    }
+    check(createCached(store, wh, "t"))
+    check(append(store, wh, ident, None, 1L).fold(e => fail(e.message), identity))
+  }
+
+  test("upgrade: a database with the text metadata column is converted on open") {
+    val dir = Files.createTempDirectory("graft-derby-upgrade").resolve("db")
+    val whLoc = Files.createTempDirectory("graft-wh").toUri.toString.stripSuffix("/")
+    val wh = UUID.randomUUID()
+    val nsId = UUID.randomUUID()
+    // a version written by any store, in the old row layout: JSON text
+    // in the row, the same document gzip'd at metadata_location
+    val old = {
+      val mem = new InMemoryCatalogStore
+      val w = mem.createWarehouse(UUID.randomUUID(), "wh", whLoc)
+        .fold(e => fail(e.message), identity).id
+      mem.createNamespace(w, Seq("ns"), Map.empty)
+      createCached(mem, w, "t")
+    }
+    val c = java.sql.DriverManager.getConnection(
+      s"jdbc:derby:${dir.toAbsolutePath};create=true")
+    try {
+      def run(sql: String, args: AnyRef*): Unit = {
+        val ps = c.prepareStatement(sql)
+        try { args.zipWithIndex.foreach { case (a, i) => ps.setObject(i + 1, a) }; ps.execute() }
+        finally ps.close()
+      }
+      run("""CREATE TABLE warehouses(id VARCHAR(36) PRIMARY KEY,
+            |  project_id VARCHAR(36) NOT NULL, name VARCHAR(255) NOT NULL,
+            |  location VARCHAR(2048) NOT NULL, active BOOLEAN NOT NULL,
+            |  props CLOB NOT NULL, CONSTRAINT wh_name_uniq UNIQUE (project_id, name))""".stripMargin)
+      run("""CREATE TABLE namespaces(wh VARCHAR(36) NOT NULL, id VARCHAR(36) NOT NULL,
+            |  name VARCHAR(1024) NOT NULL, props CLOB NOT NULL,
+            |  PRIMARY KEY (wh, name))""".stripMargin)
+      run("""CREATE TABLE tbls(wh VARCHAR(36) NOT NULL, ns VARCHAR(1024) NOT NULL,
+            |  name VARCHAR(255) NOT NULL, table_id VARCHAR(36) NOT NULL,
+            |  metadata CLOB NOT NULL, metadata_location VARCHAR(2048),
+            |  table_location VARCHAR(2048) NOT NULL,
+            |  PRIMARY KEY (wh, ns, name))""".stripMargin)
+      run("CREATE UNIQUE INDEX tbls_uuid_uniq ON tbls(wh, table_id)")
+      run("INSERT INTO warehouses VALUES (?,?,?,?,?,?)", wh.toString,
+        UUID.randomUUID().toString, "wh", whLoc, java.lang.Boolean.TRUE, "{}")
+      run("INSERT INTO namespaces VALUES (?,?,?,?)", wh.toString, nsId.toString, "ns", "{}")
+      run("INSERT INTO tbls VALUES (?,?,?,?,?,?,?)", wh.toString, "ns", "t",
+        old.tableId.toString, JsonCodecs.metadataToJson(old.metadata),
+        old.metadataLocation.get, old.tableLocation)
+    } finally c.close()
+
+    val ident = TableIdent(Seq("ns"), "t")
+    val store = JdbcCatalogStore.embedded(dir)
+    assert(store.loadTable(wh, ident).map(_.metadata) === Right(old.metadata))
+    val (converted, _) = rowBytes(dir, "t")
+    assert(converted.sameElements(Files.readAllBytes(MetadataIO.toPath(old.metadataLocation.get))))
+
+    val next = append(store, wh, ident, None, 1L).fold(e => fail(e.message), identity)
+    assert(store.createTable(wh, Seq("ns"), "u", cacheSchema, UnboundPartitionSpec.Unpartitioned,
+      None, Map.empty, stageCreate = false, timestampMs = cacheT0).isRight)
+    val reopened = JdbcCatalogStore.embedded(dir)
+    assert(reopened.loadTable(wh, ident).map(_.metadata) === Right(next.metadata))
+    assert(reopened.listTables(wh, Seq("ns")).map(_.map(_.name)) === Right(Seq("t", "u")))
+    val (bytes, loc) = rowBytes(dir, "t")
+    assert(bytes.sameElements(Files.readAllBytes(MetadataIO.toPath(loc))))
+  }
+
   private def schemaOf(s: CatalogStore): Schema = {
     import IType._
     Schema(0, Seq(NestedField.required(1, "one", TInt)))
