@@ -616,9 +616,9 @@ final class JdbcCatalogStore(jdbcUrl: String) extends CatalogStore {
                 if (next.lastUpdatedMs < timestampMs) next.copy(lastUpdatedMs = timestampMs)
                 else next
               val newLoc = newMetadataLocation(rec.tableLocation)
-              val withLog = stamped.copy(metadataLog = rec.metadataLocation.fold(
-                stamped.metadataLog)(prev =>
-                stamped.metadataLog :+ MetadataLogEntry(prev, rec.metadata.lastUpdatedMs)))
+              val withLog = rec.metadataLocation.fold(stamped)(prev =>
+                TableMetadata.appendMetadataLog(stamped,
+                  MetadataLogEntry(prev, rec.metadata.lastUpdatedMs)))
               applied += ((change.ident, rec.metadataLocation,
                 rec.copy(metadata = withLog, metadataLocation = Some(newLoc))))
           }

@@ -48,6 +48,19 @@ object TableMetadata {
     "default-partition-spec", "default-sort-order")
 
   val SupportedFormatVersions: Set[Int] = Set(1, 2)
+
+  /** How many earlier metadata files a table's metadata log keeps. */
+  val PreviousVersionsMax = "write.metadata.previous-versions-max"
+  val DefaultPreviousVersionsMax = 100
+
+  /** `next` with `previous` appended to its metadata log, keeping the
+    * newest [[PreviousVersionsMax]] entries (at least one, as Iceberg
+    * does). The files of dropped entries are not deleted. */
+  def appendMetadataLog(next: TableMetadata, previous: MetadataLogEntry): TableMetadata = {
+    val keep = next.properties.get(PreviousVersionsMax).flatMap(_.toIntOption)
+      .getOrElse(DefaultPreviousVersionsMax).max(1)
+    next.copy(metadataLog = (next.metadataLog :+ previous).takeRight(keep))
+  }
 }
 
 /** Uniform commit-time error (the catalog maps these onto the REST error

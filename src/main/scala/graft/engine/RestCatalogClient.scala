@@ -16,8 +16,16 @@ import java.net.URLEncoder
   * storage, never through the catalog (reference §3.3 step 1).
   */
 final class RestCatalogClient(baseUri: String) {
+  import RestCatalogClient._
 
   private val http = HttpClient.newHttpClient()
+
+  /** Table URI → (ETag, table) of its last 200 load, least recently
+    * used first; guarded by its own monitor. */
+  private val held = new java.util.LinkedHashMap[String, (String, LoadedTable)](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, (String, LoadedTable)]): Boolean =
+      size() > HeldTables
+  }
 
   final case class LoadedTable(
       metadataLocation: Option[String],
@@ -83,6 +91,7 @@ final class RestCatalogClient(baseUri: String) {
       s"""{"namespace":${id.namespace.map(p => s""""$p"""").mkString("[", ",", "]")},"name":"${id.name}"}"""
     postJson(s"$baseUri/catalog/v1/$prefix/tables/rename",
       s"""{"source":${identJson(source)},"destination":${identJson(dest)}}""")
+    held.synchronized(held.remove(tableUri(prefix, source)))
     ()
   }
 
@@ -107,8 +116,33 @@ final class RestCatalogClient(baseUri: String) {
     parseLoaded(postJson(tablesUri(prefix, ident.namespace), RestCodecs.render(o)))
   }
 
-  def loadTable(prefix: String, ident: TableIdent): LoadedTable =
-    parseLoaded(getJson(tableUri(prefix, ident)))
+  /** Every load asks the server. When this client holds the table from
+    * an earlier 200, the request carries that load's ETag, and a 304 for
+    * exactly that tag returns the held table without a metadata
+    * document crossing the wire. */
+  def loadTable(prefix: String, ident: TableIdent): LoadedTable = {
+    val uri = tableUri(prefix, ident)
+    val mine = held.synchronized(Option(held.get(uri)))
+    val req = HttpRequest.newBuilder(URI.create(uri)).GET()
+    mine.foreach { case (tag, _) => req.header("If-None-Match", tag) }
+    val resp = send(req.build())
+    val tag = resp.headers().firstValue("ETag").orElse(null)
+    mine match {
+      case Some((sent, table)) if resp.statusCode() == 304 && sent == tag => table
+      case _ if resp.statusCode() == 304 =>
+        held.synchronized(held.remove(uri))
+        throw CatalogError(502, "UnexpectedNotModified",
+          s"304 for ${ident.name} carries ETag $tag, not the one sent")
+      case _ =>
+        val table = parseLoaded(JsonCodecs.mapperRef.readTree(resp.body()))
+        held.synchronized(if (tag == null) held.remove(uri) else held.put(uri, (tag, table)))
+        table
+    }
+  }
+
+  /** The ETag this client holds for the table, if any. */
+  private[graft] def heldTag(prefix: String, ident: TableIdent): Option[String] =
+    held.synchronized(Option(held.get(tableUri(prefix, ident))).map(_._1))
 
   def tableExists(prefix: String, ident: TableIdent): Boolean =
     send(HttpRequest.newBuilder(URI.create(tableUri(prefix, ident)))
@@ -117,6 +151,7 @@ final class RestCatalogClient(baseUri: String) {
 
   def dropTable(prefix: String, ident: TableIdent): Unit = {
     send(HttpRequest.newBuilder(URI.create(tableUri(prefix, ident))).DELETE().build())
+    held.synchronized(held.remove(tableUri(prefix, ident)))
     ()
   }
 
@@ -206,28 +241,38 @@ final class RestCatalogClient(baseUri: String) {
       .fold(e => throw CatalogError(500, "MalformedMetadata", e), identity)
 
   private def getJson(uri: String): JsonNode =
-    JsonCodecs.parse(send(HttpRequest.newBuilder(URI.create(uri)).GET().build()).body())
+    JsonCodecs.mapperRef.readTree(send(HttpRequest.newBuilder(URI.create(uri)).GET().build()).body())
 
   private def postJson(uri: String, body: String): JsonNode = {
     val resp = send(HttpRequest.newBuilder(URI.create(uri))
       .header("Content-Type", "application/json")
       .POST(HttpRequest.BodyPublishers.ofString(body)).build())
     if (resp.body() == null || resp.body().isEmpty) JsonCodecs.mapperRef.createObjectNode()
-    else JsonCodecs.parse(resp.body())
+    else JsonCodecs.mapperRef.readTree(resp.body())
   }
 
-  private def send(req: HttpRequest, expectError: Boolean = false): HttpResponse[String] = {
-    val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
+  /** Sends and reads the body as bytes, which the JSON parser takes
+    * without an intermediate `String`. */
+  private def send(req: HttpRequest, expectError: Boolean = false): HttpResponse[Array[Byte]] = {
+    val resp = http.send(req, HttpResponse.BodyHandlers.ofByteArray())
     if (resp.statusCode() >= 400 && !expectError) {
       val err = try {
-        val e = JsonCodecs.parse(resp.body()).get("error")
+        val e = JsonCodecs.mapperRef.readTree(resp.body()).get("error")
         CatalogError(e.get("code").asInt(), e.get("type").asText(),
           e.get("message").asText())
       } catch { case _: Exception =>
-        CatalogError(resp.statusCode(), "HttpError", resp.body())
+        CatalogError(resp.statusCode(), "HttpError",
+          new String(resp.body(), java.nio.charset.StandardCharsets.UTF_8))
       }
       throw err
     }
     resp
   }
+}
+
+object RestCatalogClient {
+
+  /** Most tables one client holds for conditional loads; the same bound
+    * as the JDBC store's parsed-metadata cache. */
+  val HeldTables: Int = 64
 }

@@ -341,9 +341,17 @@ final class CatalogServer(
       case ("GET", prefix :: "namespaces" :: ns :: "tables" :: tbl :: Nil) =>
         withWh(ex, prefix) { wh =>
           val ident = TableIdent(decodeNs(ns), tbl)
-          ok(ex, authz.checkTableOp(wh, "load", ident)
-            .flatMap(_ => store.loadTable(wh, ident)))(
-            RestCodecs.loadTableResponse(_, tableConfig(wh, parseDataAccess(ex))))
+          // the tag is computed only after authz and the store load, so a
+          // denied or missing table answers 403/404 whatever the client holds
+          authz.checkTableOp(wh, "load", ident).flatMap(_ => store.loadTable(wh, ident)) match {
+            case Left(e) => respondError(ex, e)
+            case Right(rec) =>
+              val config = tableConfig(wh, parseDataAccess(ex))
+              val tag = rec.metadataLocation.map(loadETag(_, config))
+              tag.foreach(ex.getResponseHeaders.set("ETag", _))
+              if (tag.exists(ifNoneMatch(ex, _))) respond(ex, 304)
+              else respond(ex, 200, RestCodecs.loadTableResponse(rec, config))
+          }
         }
       case ("HEAD", prefix :: "namespaces" :: ns :: "tables" :: tbl :: Nil) =>
         withWh(ex, prefix) { wh =>
@@ -382,10 +390,13 @@ final class CatalogServer(
                 "identifier in body does not match request path"))
             else authz.checkTableOp(wh, "commit", ident)
               // contract verifiers may veto the update diff (409),
-              // reference catalog/tables.rs:458-463
-              .flatMap(_ => store.loadTable(wh, ident).toOption
-                .map(rec => contracts.checkCommit(r.updates, rec.metadata))
-                .getOrElse(Right(())))
+              // reference catalog/tables.rs:458-463; with none mounted
+              // there is nothing to check the current metadata against
+              .flatMap(_ =>
+                if (contracts.isEmpty) Right(())
+                else store.loadTable(wh, ident).toOption
+                  .map(rec => contracts.checkCommit(r.updates, rec.metadata))
+                  .getOrElse(Right(())))
               .flatMap(_ => store.commitTable(wh, ident, r.requirements, r.updates, clock()))
           }
           result.foreach(rec => events.emit(CatalogEvent("updateTable", wh, ident,
@@ -529,6 +540,15 @@ final class CatalogServer(
     DataAccess(
       vendedCredentials = values.contains("vended-credentials"),
       remoteSigning = values.contains("remote-signing"))
+  }
+
+  /** Whether the request's `If-None-Match` lists `tag` (or `*`). Weak
+    * comparison, as RFC 9110 §13.1.2 asks of this header. */
+  private def ifNoneMatch(ex: HttpExchange, tag: String): Boolean = {
+    import scala.jdk.CollectionConverters._
+    Option(ex.getRequestHeaders.get("If-None-Match")).map(_.asScala.toSeq).getOrElse(Nil)
+      .flatMap(_.split(',')).map(_.trim.stripPrefix("W/"))
+      .exists(t => t == tag || t == "*")
   }
 
   /** Per-table client config attached to LoadTableResult, shaped by the
@@ -783,6 +803,18 @@ object CatalogServer {
     * multi-table transaction of large updates while a runaway or hostile
     * body cannot make a handler buffer without bound. */
   private[server] val MaxRequestBodyBytes: Int = 8 << 20
+
+  /** Strong ETag of a table load: the SHA-256 of the metadata location
+    * and the sorted per-table config, the two inputs of the 200 body
+    * besides the metadata itself. It is sound because a metadata
+    * location is write-once: every commit writes a new file under a
+    * fresh name and never rewrites an old one, so a location names one
+    * metadata document forever (the JDBC store's parsed-metadata cache
+    * keys on the same rule). The config depends on the warehouse and on
+    * `X-Iceberg-Access-Delegation`. */
+  private[server] def loadETag(metadataLocation: String, config: Map[String, String]): String =
+    "\"" + SigV4.sha256Hex((metadataLocation +: config.toSeq.sorted.flatMap {
+      case (k, v) => Seq(k, v) }).mkString("\u0000")) + "\""
 
   /** Every server socket runs with TCP_NODELAY. With Nagle on, a reply
     * shorter than one loopback segment (about 64 KB) waits for the

@@ -490,6 +490,7 @@ trait ContractVerifier {
 /** Verifier chain: first Violation short-circuits (reference chain
   * behavior) and surfaces as 409 ContractViolation. */
 final class ContractVerifiers(chain: Seq[ContractVerifier]) {
+  def isEmpty: Boolean = chain.isEmpty
   private def run(f: ContractVerifier => ContractOutcome): Either[CatalogError, Unit] = {
     for (v <- chain) f(v) match {
       case ContractOutcome.Clear =>
@@ -741,7 +742,8 @@ object CloudEventBackend {
 /** Bounded async publisher: the commit path never blocks on the event
   * sink — a full queue drops the event after a short offer timeout and
   * logs, exactly the reference's fire-and-forget contract (1000-slot
-  * channel, 50 ms enqueue timeout, event_publisher.rs:16-53). */
+  * channel, 50 ms enqueue timeout, event_publisher.rs:16-53). Drops and
+  * backend failures are also counted ([[dropped]], [[failed]]). */
 final class QueueingEventPublisher(
     backend: CloudEventBackend,
     capacity: Int = 1000,
@@ -749,6 +751,8 @@ final class QueueingEventPublisher(
 
   private val queue = new ArrayBlockingQueue[CatalogEvent](capacity)
   private val seq = new AtomicLong(0)
+  private val drops = new AtomicLong(0)
+  private val failures = new AtomicLong(0)
   @volatile private var running = true
 
   private val worker = new Thread(() => {
@@ -757,6 +761,7 @@ final class QueueingEventPublisher(
       if (e != null)
         try backend.publish(e)
         catch { case ex: Exception =>
+          failures.incrementAndGet()
           System.err.println(s"[graft-events] backend failed: ${ex.getMessage}")
         }
     }
@@ -766,12 +771,20 @@ final class QueueingEventPublisher(
 
   def nextSequenceNumber(): Long = seq.incrementAndGet()
 
+  /** Events dropped because the queue stayed full. */
+  def dropped: Long = drops.get()
+
+  /** Events the backend failed to publish. */
+  def failed: Long = failures.get()
+
   /** Fire-and-forget: drops with a log line when the queue stays full
     * past the timeout. */
   def emit(event: CatalogEvent): Unit =
-    if (!queue.offer(event, enqueueTimeoutMs, TimeUnit.MILLISECONDS))
+    if (!queue.offer(event, enqueueTimeoutMs, TimeUnit.MILLISECONDS)) {
+      drops.incrementAndGet()
       System.err.println(
         s"[graft-events] queue full, dropping ${event.eventType} for ${event.ident.name}")
+    }
 
   def close(): Unit = { running = false; worker.join(2000) }
 }

@@ -263,6 +263,30 @@ abstract class CatalogStoreContract extends AnyFunSuite {
     assert(c2.metadata.metadataLog.size === 2)
   }
 
+  test("commit: the metadata log keeps write.metadata.previous-versions-max entries") {
+    val (store, wh) = freshStore()
+    assert(store.createNamespace(wh, Seq("ns"), Map.empty).isRight)
+    val ident = TableIdent(Seq("ns"), "t")
+    val created = createTable(store, wh, Seq("ns"), "t")
+    def commit(props: Map[String, String]): TableRecord =
+      store.commitTable(wh, ident, Nil, Seq(TableUpdate.SetProperties(props)), t0)
+        .fold(e => fail(e.message), identity)
+    val locations = created.metadataLocation.get +:
+      (1 to 105).map(i => commit(Map("n" -> i.toString)).metadataLocation.get)
+
+    def log(): Seq[String] = store.loadTable(wh, ident)
+      .fold(e => fail(e.message), _.metadata.metadataLog.map(_.metadataFile))
+    // the default keeps the newest 100 of the 105 earlier versions
+    assert(log() === locations.init.takeRight(100))
+    // dropped entries keep their files
+    assert(java.nio.file.Files.exists(MetadataIO.toPath(locations.head)))
+
+    val capped = commit(Map(TableMetadata.PreviousVersionsMax -> "3"))
+    assert(log() === locations.takeRight(3))
+    commit(Map("n" -> "106"))
+    assert(log() === (locations :+ capped.metadataLocation.get).takeRight(3))
+  }
+
   test("commit guards: assign-uuid identity-only, set-location immutable") {
     val (store, wh) = freshStore()
     assert(store.createNamespace(wh, Seq("ns"), Map.empty).isRight)

@@ -94,6 +94,46 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally server.stop()
   }
 
+  test("commit route loads the table before the commit only for a mounted verifier") {
+    val loads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val inner = new InMemoryCatalogStore
+    // forwards every call to `inner` and counts the loadTable calls
+    val counting = java.lang.reflect.Proxy.newProxyInstance(getClass.getClassLoader,
+      Array(classOf[CatalogStore]),
+      (_: AnyRef, m: java.lang.reflect.Method, args: Array[AnyRef]) => {
+        if (m.getName == "loadTable") loads.incrementAndGet()
+        try m.invoke(inner, Option(args).getOrElse(Array.empty[AnyRef]): _*)
+        catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
+      }).asInstanceOf[CatalogStore]
+    val wh = Files.createTempDirectory("graft-ext").toUri.toString.stripSuffix("/")
+    val prefix = counting.createWarehouse(project, "wh", wh)
+      .fold(e => fail(e.message), identity).id.toString
+    val clear = new ContractVerifier {
+      val name = "clear"
+      def checkCommit(updates: Seq[TableUpdate], current: TableMetadata): ContractOutcome =
+        ContractOutcome.Clear
+    }
+    def commitLoads(contracts: ContractVerifiers, value: String): Int = {
+      val server = new CatalogServer(counting, project, contracts = contracts).start()
+      try {
+        loads.set(0)
+        assert(post(server.baseUri, s"/catalog/v1/$prefix/namespaces/ns/tables/t",
+          s"""{"updates":[{"action":"set-properties","updates":{"k":"$value"}}]}""")
+          .statusCode() === 200)
+        loads.get()
+      } finally server.stop()
+    }
+    val setup = new CatalogServer(counting, project).start()
+    try {
+      assert(post(setup.baseUri, s"/catalog/v1/$prefix/namespaces",
+        """{"namespace":["ns"]}""").statusCode() === 200)
+      assert(post(setup.baseUri, s"/catalog/v1/$prefix/namespaces/ns/tables",
+        s"""{"name":"t","schema":$schemaJson}""").statusCode() === 200)
+    } finally setup.stop()
+    assert(commitLoads(ContractVerifiers.Empty, "a") === 0)
+    assert(commitLoads(ContractVerifiers(clear), "b") === 1)
+  }
+
   test("commit path emits createTable/updateTable/dropTable events in order") {
     val sink = new CloudEventBackend.Collecting
     val publisher = new QueueingEventPublisher(sink)
@@ -138,6 +178,35 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       // 7 drops × ≤10ms timeout — far below a blocking publisher
       assert(elapsedMs < 2000, s"emit path blocked for ${elapsedMs}ms")
     } finally { gate.countDown(); p.close() }
+  }
+
+  test("publisher counts every queue-full drop and every backend failure") {
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val blocked = new CloudEventBackend {
+      def publish(e: CatalogEvent): Unit = { entered.countDown(); gate.await() }
+    }
+    val ident = TableIdent(Seq("ns"), "t")
+    def evt(i: Long) = CatalogEvent("updateTable", UUID.randomUUID(), ident,
+      UUID.randomUUID(), i, i)
+    val p = new QueueingEventPublisher(blocked, capacity = 1, enqueueTimeoutMs = 1)
+    try {
+      p.emit(evt(1L))
+      assert(entered.await(5, java.util.concurrent.TimeUnit.SECONDS))
+      p.emit(evt(2L)) // fills the one slot while the worker is blocked
+      (3L to 12L).foreach(i => p.emit(evt(i)))
+      assert(p.dropped === 10L)
+      assert(p.failed === 0L)
+    } finally { gate.countDown(); p.close() }
+
+    val failing = new CloudEventBackend {
+      def publish(e: CatalogEvent): Unit = throw new java.io.IOException("sink down")
+    }
+    val q = new QueueingEventPublisher(failing)
+    (1L to 3L).foreach(i => q.emit(evt(i)))
+    q.close() // drains the queue
+    assert(q.failed === 3L)
+    assert(q.dropped === 0L)
   }
 
   test("file-backed sink: durable delivery through the publisher, append across reopen") {
@@ -361,12 +430,19 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       stub.rejectConnect = false
 
       // dead broker: publish throws (the publisher's log-and-drop
-      // contract), emit never blocks the caller
+      // contract), emit never blocks the caller. The broker's port is one
+      // held by a socket that is bound but not listening: every connect
+      // to it is refused, and no other process can take it meanwhile (a
+      // freed port could be reused by anything listening on this host).
       stub.close()
       sink.close()
-      val dead = new CloudEventBackend.NatsBacked(
-        "127.0.0.1", stub.port, "graft.events", timeoutMs = 500)
-      intercept[IllegalStateException](dead.publish(evt("createTable", 7L)))
+      val held = new java.net.Socket()
+      try {
+        held.bind(new java.net.InetSocketAddress("127.0.0.1", 0))
+        val dead = new CloudEventBackend.NatsBacked(
+          "127.0.0.1", held.getLocalPort, "graft.events", timeoutMs = 500)
+        intercept[IllegalStateException](dead.publish(evt("createTable", 7L)))
+      } finally held.close()
     } finally { stub.close(); sink.close() }
   }
 }
